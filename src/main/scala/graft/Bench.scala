@@ -145,22 +145,9 @@ object Bench {
     // count territory, so the tail runner scales this with fixture size
     // instead of conflating spill overhang with algorithmic shape.
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings are built per-action for listener events; cap them
-      // so a lineage regression costs a truncated debug string, not
-      // minutes of 2 GiB string building (the r9 bench-timeout mode)
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // bounded-buffer typed aggregates must not fall back to sort-based
-      // aggregation at 128 groups/task — see SessionFactory scaladoc
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SessionFactory.objAggFallbackThreshold)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus).toInt
+    val spark = SessionFactory.session("graft-bench", Some(s"local[$cpus]"),
+      shufflePartitions)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: initialize codegen, parquet reader and scheduler
     // paths so the alphabetically-first query doesn't absorb session

@@ -9,6 +9,10 @@ import org.apache.spark.sql.SparkSession
   * applied once, together with the UTC session timezone every timestamp
   * oracle depends on and the [[GraftExtensions]] SQL surface.
   *
+  * Every session is built by [[session]]: the production mains, Bench,
+  * PipelineBench, PlanDump, Verify and the test suites differ only in
+  * master and shuffle width, so the plan verified is the plan benched.
+  *
   * The s3a endpoint is deployment-specific, so it comes from the
   * `GRAFT_S3_ENDPOINT` env var (or an explicit argument) rather than a
   * hard-coded URL; no endpoint → the settings still apply wherever an
@@ -29,7 +33,9 @@ object SessionFactory {
     "spark.sql.maxPlanStringLength" -> "1000000",
     "spark.sql.extensions" -> classOf[GraftExtensions].getName,
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
-      objAggFallbackThreshold
+      objAggFallbackThreshold,
+    // broadcast join sides up to 64 MB (default 10 MB) instead of shuffling
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString
   )
 
   /** ObjectHashAggregate keeps a per-task hash map of aggregation
@@ -80,22 +86,6 @@ object SessionFactory {
       "fs.s3a.threads.max" -> "256"
     ) ++ endpoint.map("fs.s3a.endpoint" -> _)
 
-  /** A builder carrying the full graft conf; callers may add/override
-    * before `getOrCreate()`.
-    */
-  def builder(appName: String = "graft",
-              master: Option[String] = None,
-              shufflePartitions: Int = 32,
-              endpoint: Option[String] = sys.env.get("GRAFT_S3_ENDPOINT"))
-      : SparkSession.Builder = {
-    val b = SparkSession.builder().appName(appName)
-    master.foreach(b.master)
-    (baseConf(shufflePartitions) ++
-      s3aConf(endpoint).map { case (k, v) => s"spark.hadoop.$k" -> v })
-      .foreach { case (k, v) => b.config(k, v) }
-    b
-  }
-
   /** Build (or join) the session and make the tuning effective even when
     * an earlier SparkContext already exists (spark-shell, test suites):
     * builder-time `spark.hadoop.*` entries don't retrofit onto a live
@@ -108,7 +98,10 @@ object SessionFactory {
               shufflePartitions: Int = 32,
               endpoint: Option[String] = sys.env.get("GRAFT_S3_ENDPOINT"))
       : SparkSession = {
-    val spark = builder(appName, master, shufflePartitions, endpoint).getOrCreate()
+    val b = SparkSession.builder().appName(appName)
+      .config(baseConf(shufflePartitions) ++
+        s3aConf(endpoint).map { case (k, v) => s"spark.hadoop.$k" -> v })
+    val spark = master.fold(b)(b.master).getOrCreate()
     val hc = spark.sparkContext.hadoopConfiguration
     s3aConf(endpoint).foreach { case (k, v) => hc.set(k, v) }
     GraftExtensions.register(spark)

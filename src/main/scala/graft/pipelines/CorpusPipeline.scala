@@ -170,7 +170,7 @@ object CorpusPipeline {
     val clean = Dedup.applyPairDedup(selfClean, col("doc_id"), crossPairsOf(sigs))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val keptSigs = sigs.join(clean.select("doc_id"), Seq("doc_id"), "left_semi")
-    (enrich(clean, cfg), keptSigs, Seq(gated, sigsAll, clean))
+    (enrich(clean, cfg), keptSigs, Seq(gated, sigsAll, selfPairs, clean))
   }
 
   /** Stage a day's kept signatures as the accumulated signature STORE —

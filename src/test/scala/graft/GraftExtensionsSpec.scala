@@ -7,7 +7,6 @@ import graft.functions.{Fnv64, Kernels, VectorFunctions}
 class GraftExtensionsSpec extends SparkTestBase {
 
   test("SQL users reach the kernels after registration") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT graft_fnv64('hello') AS h,
         |  graft_simhash64(split('a b c', ' ')) AS sh,
@@ -45,7 +44,6 @@ class GraftExtensionsSpec extends SparkTestBase {
   }
 
   test("SQL aggregates: topk, minhash union, vector sum") {
-    GraftExtensions.register(spark)
     import graft.TestSpark.spark.implicits._
     Seq(("g", 0.9, 1L, Array(1.0, 2.0)), ("g", 0.8, 2L, Array(3.0, 4.0)))
       .toDF("grp", "score", "id", "vec").createOrReplaceTempView("agg_in")

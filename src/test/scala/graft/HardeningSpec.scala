@@ -121,7 +121,6 @@ class HardeningSpec extends SparkTestBase {
   }
 
   test("SQL functions fail cleanly on bad arity and types") {
-    GraftExtensions.register(spark)
     val arity = intercept[Exception] {
       spark.sql("SELECT graft_minhash(array('a'))").collect()
     }

@@ -613,8 +613,18 @@ class PlanAuditSpec extends SparkTestBase {
         // operator-level repartition(n, otherCol) must count as a data
         // exchange, not hide behind the loader's exemption.
         !("REPARTITION_BY_NUM".r.findFirstIn(l).isDefined &&
-          "hashpartitioning\\((doc_id|vec_id)#\\d+L".r.findFirstIn(l).isDefined)
+          "hashpartitioning\\((doc_id|vec_id)#\\d+L, \\d+\\)".r.findFirstIn(l).isDefined)
     }
+
+  test("only the loader's single-id-column split-up is exempt from data exchanges") {
+    def line(part: String, origin: String) =
+      s"+- Exchange hashpartitioning($part), $origin, [plan_id=1]"
+    assert(dataExchanges(line("doc_id#5101L, 8", "REPARTITION_BY_NUM")) == 0)
+    assert(dataExchanges(line("vec_id#7L, 32", "REPARTITION_BY_NUM")) == 0)
+    assert(dataExchanges(line("doc_id#1L, lang#2", "REPARTITION_BY_NUM")) == 1)
+    assert(dataExchanges(line("doc_id#1L, lang#2, 8", "REPARTITION_BY_NUM")) == 1)
+    assert(dataExchanges(line("doc_id#1L, 8", "ENSURE_REQUIREMENTS")) == 1)
+  }
 
   test("gopher flags and shard assignment are zero-exchange projections") {
     for (q <- Seq("gopher_quality_flags", "corpus_shards")) {

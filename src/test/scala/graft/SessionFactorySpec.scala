@@ -17,13 +17,25 @@ class SessionFactorySpec extends SparkTestBase {
     assert(c("spark.sql.session.timeZone") == "UTC")
     assert(c("spark.sql.shuffle.partitions") == "32")
     assert(c("spark.sql.extensions") == "graft.GraftExtensions")
+    assert(c("spark.sql.autoBroadcastJoinThreshold") == "67108864") // 64 MiB
+  }
+
+  test("the test session carries every base conf entry but shuffle width") {
+    val c = SessionFactory.baseConf() - "spark.sql.shuffle.partitions"
+    c.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
   test("session() retrofits fs settings and SQL functions onto a live context") {
-    spark // materialize the suite's session first — the case under test
-          // is exactly "a context already exists"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // the case under test is "a context already exists": strip what the
+    // suite's own SessionFactory session installed, then join it
     val hc0 = spark.sparkContext.hadoopConfiguration
+    Seq("fs.s3a.multipart.size", "fs.s3a.block.size", "fs.s3a.threads.max")
+      .foreach(hc0.unset)
+    spark.sessionState.functionRegistry
+      .dropFunction(FunctionIdentifier("graft_fnv64"))
+    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val s = SessionFactory.session(endpoint = Some("http://lake.example:9000"))
       val hc = s.sparkContext.hadoopConfiguration
@@ -37,12 +49,11 @@ class SessionFactorySpec extends SparkTestBase {
       val h = Seq("x").toDF("t").selectExpr("graft_fnv64(t)").head().getLong(0)
       assert(h != 0L)
     } finally {
-      // getOrCreate() returned the SHARED suite session — restore what
-      // this test mutated so later suites don't inherit a fake endpoint
-      // or a different shuffle width
+      // getOrCreate() returned the SHARED suite session: every base conf
+      // entry matches except the shuffle width, and the fake endpoint
+      // must not reach later suites
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      Seq("fs.s3a.multipart.size", "fs.s3a.block.size", "fs.s3a.threads.max",
-        "fs.s3a.endpoint").foreach(hc0.unset)
+      hc0.unset("fs.s3a.endpoint")
     }
   }
 }

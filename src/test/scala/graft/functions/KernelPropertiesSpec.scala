@@ -97,7 +97,6 @@ class KernelPropertiesSpec extends SparkTestBase {
         v => v)).as("hof")).head()
     assert(rn.getInt(0) == 1 && rn.getInt(1) == 1)
     // SQL surface
-    graft.GraftExtensions.register(graft.TestSpark.spark)
     val s = Seq((Seq(1L, 2L), Seq(1L, 2L))).toDF("a", "b")
       .selectExpr("graft_agree_count(a, b)").head().getInt(0)
     assert(s == 2)
@@ -128,7 +127,6 @@ class KernelPropertiesSpec extends SparkTestBase {
     assert(plan.contains("long_dot"), plan)
     assert(df.orderBy("d").head().getLong(0) == 3L) // id=0: 0*2 + 1*3
     // SQL surface
-    graft.GraftExtensions.register(graft.TestSpark.spark)
     val s = Seq((Seq(2L, 3L), Seq(4L, 5L))).toDF("a", "b")
       .selectExpr("graft_long_dot(a, b)").head().getLong(0)
     assert(s == 23L)

@@ -33,23 +33,16 @@ class CliSpec extends AnyFunSuite {
   }
 
   /** The mains join the suite's shared session via getOrCreate, which
-    * re-applies SessionFactory's runtime SQL conf (shuffle.partitions
-    * 32, plan-string cap) onto it — correct production behavior, but a
-    * LEAK here: every suite running after this one would silently
-    * inherit the pipeline tuning instead of TestSpark's (the bucketed
-    * plan audits key on the 4-partition test default). Snapshot and
-    * restore around each main() call.
+    * re-applies SessionFactory's conf onto it. Both sessions come from
+    * SessionFactory, so only the shuffle width differs (32 vs the
+    * suite's 4, which the bucketed plan audits key on): restore it
+    * around each main() call.
     */
   private def withSessionConfRestored[A](body: => A): A = {
     val conf = graft.TestSpark.spark.conf
-    val keys =
-      Seq("spark.sql.shuffle.partitions", "spark.sql.maxPlanStringLength")
-    val saved = keys.map(k => k -> conf.getOption(k))
+    val saved = conf.get("spark.sql.shuffle.partitions")
     try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
+    finally conf.set("spark.sql.shuffle.partitions", saved)
   }
 
   test("JhubMain end-to-end: argv -> glob -> pipeline -> staging parquet") {

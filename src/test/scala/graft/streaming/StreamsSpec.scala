@@ -295,6 +295,36 @@ class StreamsSpec extends SparkTestBase {
       .collect().sorted.toSeq == Seq(1L, 2L, 11L))
   }
 
+  test("incrementalDedupStream frees every funnel cache on each batch") {
+    import graft.TestSpark.spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      TestSpark.sqlContext
+    val cfg = graft.pipelines.CorpusPipeline.Config(minQuality = 0.0,
+      keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
+      numHashes = 64, bands = 16, minEstJaccard = 0.5, featureDim = 4)
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.incrementalDedupStream(mem.toDF().toDF("doc_id", "text"),
+        tempDir("leak_sigs").toString, tempDir("leak_curated").toString,
+        tempDir("leak_ckpt").toString, cfg,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .start()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def leaked() = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    val perBatch = try {
+      (1 to 3).map { b =>
+        val text = s"the cat and the dog walk to mill number $b by the river"
+        mem.addData((b * 10L, text), (b * 10L + 1, text),
+          (b * 10L + 2, s"the sun is warm and the wind is cold over hill $b"))
+        q.processAllAvailable()
+        // unpersist(blocking = false) is async; poll briefly
+        val deadline = System.nanoTime() + 10000000000L
+        while (leaked() > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+        leaked()
+      }
+    } finally q.stop()
+    assert(perBatch == Seq(0, 0, 0), s"cached RDDs left after each batch: $perBatch")
+  }
+
   test("streamStreamJoin: time-bounded attribution over two memory streams") {
     import graft.TestSpark.spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
